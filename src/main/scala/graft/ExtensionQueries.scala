@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextExprs._
 import graft.functions.VectorExprs
 import graft.operators.{ConnectedComponents, Dedup, SimilaritySearch, TextAnalysis}
+import graft.pipelines.TrainingExport
 import graft.sources.{Corpus, Tables}
 
 /** Training-data-pipeline extension queries (dedup, similarity
@@ -65,24 +66,14 @@ object ExtensionQueries {
         val p = java.nio.file.Files
           .createTempDirectory(prefix).toAbsolutePath
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p)
-              .sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case _: Throwable => () }))
+          try TmpfsScratch.deleteRecursively(p)
+          catch { case _: Throwable => () }))
         build.write.mode("overwrite").parquet(p.toString)
         p.toString
       })
     s.read.parquet(path)
   }
 
-  /** A fresh scratch directory for a query that builds a written
-    * index/state layout, reclaimed at JVM exit — the [[scratchTable]]
-    * discipline without the caching, because building the state IS
-    * part of what these queries exercise and measure.
-    */
   /** Planted cross-doc SPANS — docs % 13 == 0 get the first 20 tokens
     * of their successor appended (n_chars recomputed): ONE Spark
     * spelling shared by q_pipeline_train_export_spans (over documents)
@@ -175,18 +166,79 @@ object ExtensionQueries {
     evens.unionByName(oddExact).unionByName(oddPert)
   }
 
+  /** A fresh scratch directory for a query that builds a written
+    * index/state layout, reclaimed at JVM exit — the [[scratchTable]]
+    * discipline without the caching, because building the state IS
+    * part of what these queries exercise and measure.
+    */
   private def freshStateDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+      try TmpfsScratch.deleteRecursively(p)
+      catch { case _: Throwable => () }))
     p.toString
   }
+
+  /** The state scaffold of every stateful query body. It names the
+    * state `tag` + this JVM's runtime name: harness mains run under a
+    * per-JVM scratch warehouse (ScratchWarehouse), but a caller
+    * embedding a query in their own session may not, so names stay
+    * collision-free. It runs `body` at shuffle width 8: each batch's
+    * probe joins and appends move one batch's rows (kilobytes at
+    * bench scale, batch-bounded at any scale), so a corpus-sized width
+    * only multiplies task overhead across the loop's many tiny
+    * exchanges; width is a physical knob, and exchange COUNT and
+    * results are unchanged. [[Dedup.dropState]] clears the prefix
+    * before the body (a stale state from an aborted run must not leak
+    * in) and again after it, however it ends.
+    */
+  private[graft] def withIngestState[T](s: SparkSession, tag: String)(
+      body: String => T): T = {
+    val prefix = tag + jvmName
+    val shufKey = "spark.sql.shuffle.partitions"
+    val prevShuf = s.conf.get(shufKey)
+    try {
+      s.conf.set(shufKey, "8")
+      Dedup.dropState(s, prefix)
+      body(prefix)
+    } finally {
+      s.conf.set(shufKey, prevShuf)
+      Dedup.dropState(s, prefix)
+    }
+  }
+
+  private[graft] lazy val jvmName: String =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+      .replaceAll("[^A-Za-z0-9]", "_")
+
+  /** The arrival loop of the ingest-export bodies: `corpus` arrives as
+    * three batches (`pmod(doc_id, 3)`, in order), each ingested after
+    * the previous batch's tracked caches are released; the shipped
+    * frames union by name.
+    */
+  private def arrivalBatches(corpus: DataFrame)(
+      ingest: DataFrame => DataFrame): DataFrame =
+    (0 until 3).map { b =>
+      Dedup.unpersistAll()
+      ingest(corpus.filter(pmod(col("doc_id"), lit(3)) === b))
+    }.reduce(_ unionByName _)
+
+  /** The [[TrainingExport.Config]] the export bodies share; each
+    * states only its difference.
+    */
+  private val exportCfg = TrainingExport.Config(
+    curate = true,
+    dedup = TrainingExport.DedupExact,
+    contaminationMaxPpm = Some(500000L),
+    budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
+    defaultBudget = 3000L,
+    numShards = 4)
+
+  /** [[exportCfg]] with budgets in chunk tokens, for the chunk-front
+    * bodies.
+    */
+  private val chunkExportCfg = exportCfg.copy(
+    budgets = Seq("src0" -> 500L, "src1" -> 350L), defaultBudget = 400L)
 
   /** Public-suffix-list fixture for q_url_psl_full, in the REAL
     * publicsuffix.org file format (comment lines, blanks, a wildcard
@@ -431,15 +483,7 @@ object ExtensionQueries {
       // VERBATIM — the layout is a physical change only.
       graft.functions.PolyHash.register(s)
       val corpus = Corpus.spanCorpus(s, dir)
-      val tbl = "graft_span_shingles_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val spans = try {
-        // batch-bounded exchanges don't need corpus-sized width (the
-        // incremental-ingest knob; results and exchange COUNT unchanged)
-        s.conf.set(shufKey, "8")
+      val spans = withIngestState(s, "graft_span_shingles_") { tbl =>
         Dedup.writeShingleTable(
           corpus.filter(col("doc_id") % 4 === 1), tbl, buckets = 8)
         Dedup.appendAndMaybeCompactShingles(
@@ -453,10 +497,6 @@ object ExtensionQueries {
           s.table(tbl)).localCheckpoint(true)
         Dedup.unpersistAll()
         out
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
       }
       spans.orderBy("doc_a", "doc_b", "a_start", "b_start")
     }),
@@ -575,21 +615,10 @@ object ExtensionQueries {
       val batch = docs.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .withColumn("text", concat(col("text"), lit(" ingest tail")))
-      val tbl = "graft_simhash_state_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_simhash_state_") { tbl =>
         Dedup.writeSimhashTable(docs, tbl, maxHamming = 4, buckets = 8)
         Dedup.simhashPairsAgainst(batch, s, tbl, maxHamming = 4)
           .localCheckpoint(true)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       Dedup.unpersistAll()
       out.orderBy("new_doc", "corpus_doc")
@@ -614,22 +643,11 @@ object ExtensionQueries {
         .unionByName(
           s.range(10).select((col("id") + 4000000L).as("doc_id"))
             .crossJoin(seed).select("doc_id", "source", "text"))
-      val tbl = "graft_simhash_hotseg_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_simhash_hotseg_") { tbl =>
         Dedup.writeSimhashTable(corpus, tbl, maxHamming = 4, buckets = 8)
         Dedup.simhashPairsAgainst(batch, s, tbl, maxHamming = 4,
           maxCorpusDocsPerSegment = 8)
           .localCheckpoint(true)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       Dedup.unpersistAll()
       out.orderBy("new_doc", "corpus_doc")
@@ -645,13 +663,7 @@ object ExtensionQueries {
       val batch = docs.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .withColumn("text", concat(col("text"), lit(" ingest tail")))
-      val tbl = "graft_simhash_del_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_simhash_del_") { tbl =>
         Dedup.writeSimhashTable(docs, tbl, maxHamming = 4, buckets = 8)
         Dedup.deleteFromStateTable(
           docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")), tbl)
@@ -666,11 +678,6 @@ object ExtensionQueries {
           .localCheckpoint(true)
         Dedup.unpersistAll()
         masked.unionByName(compacted)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       out.select("stage", "new_doc", "corpus_doc", "hamming")
         .orderBy("stage", "new_doc", "corpus_doc")
@@ -696,13 +703,7 @@ object ExtensionQueries {
       val batch = docs.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .withColumn("text", concat(col("text"), lit(" ingest tail")))
-      val tbl = "graft_simhash_stream_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_simhash_stream_") { tbl =>
         Dedup.writeSimhashTable(docs, tbl, maxHamming = 4, buckets = 8)
         val zero = Dedup.simhashPairsAgainst(batch.limit(0), s, tbl, maxHamming = 4)
           .localCheckpoint(true)
@@ -737,11 +738,6 @@ object ExtensionQueries {
             fp, tbl, maxHamming = 4, bits = SimhashBits, buckets = 8)
           acc.unionByName(pairs)
         }.localCheckpoint(true)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       Dedup.unpersistAll()
       out.orderBy("new_doc", "corpus_doc")
@@ -819,8 +815,8 @@ object ExtensionQueries {
       // r19 decode-cap pushdown was spec-covered but no declared query
       // ran with cap > 0): corpus clustered + PQ-coded once into the
       // written IVFADC layout, then the scaled-copy batch probes with
-      // maxCorpusVecsPerList = 3 — each touched list contributes only
-      // its 3 smallest corpus ids, and the capped representative set
+      // maxCorpusVecsPerList = 8 — each touched list contributes only
+      // its 8 smallest corpus ids, and the capped representative set
       // is pushed below the reconstruction's posexplode/groupBy as the
       // idFilter broadcast semi-join. The oracle replays the whole
       // chain (coarse seed → Lloyd → assign; PQ fit → codes → recon)
@@ -1020,13 +1016,7 @@ object ExtensionQueries {
       graft.functions.PolyHash.register(s)
       graft.functions.MinHashSig.register(s)
       val d = Tables.documents(s, dir)
-      val tbl = "graft_band_state_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_band_state_") { tbl =>
         val corpusSigs = Dedup.signatureTable(d).localCheckpoint(true)
         Dedup.writeBandTable(corpusSigs, tbl, buckets = 8)
         Dedup.deleteFromBandTable(
@@ -1054,11 +1044,6 @@ object ExtensionQueries {
           .withColumn("stage", lit("compacted"))
           .localCheckpoint(true)
         masked.unionByName(compacted)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       out.select("stage", "new_id", "corpus_id", "n_agree")
         .orderBy("stage", "new_id", "corpus_id")
@@ -1075,13 +1060,7 @@ object ExtensionQueries {
       // already dropped; writeLineTable's scaladoc pins why that IS
       // the takedown semantics).
       val corpus = Corpus.paraCorpus(s, dir).select("doc_id", "text")
-      val tbl = "graft_line_state_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_line_state_") { tbl =>
         Dedup.writeLineTable(corpus, tbl, buckets = 8)
         Dedup.deleteFromLineTable(
           corpus.filter(col("doc_id") % 5 === 0).select("doc_id"), tbl)
@@ -1099,11 +1078,6 @@ object ExtensionQueries {
           .localCheckpoint(true)
         Dedup.unpersistAll()
         masked.unionByName(compacted)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       out.select("stage", "doc_id", "n_paras", "n_kept", "text_deduped")
         .orderBy("stage", "doc_id")
@@ -1186,13 +1160,7 @@ object ExtensionQueries {
       // removal in. Both stages must equal an oracle whose state
       // drops the deleted owners' rows.
       val corpus = Corpus.docCorpus(s, dir).select("doc_id", "text")
-      val tbl = "graft_chunk_state_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_chunk_state_") { tbl =>
         Dedup.writeChunkTable(
           corpus, tbl, buckets = 8, chunkTokens = 30, strideTokens = 20)
         Dedup.deleteFromLineTable(
@@ -1213,11 +1181,6 @@ object ExtensionQueries {
           .localCheckpoint(true)
         Dedup.unpersistAll()
         masked.unionByName(compacted)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       out.select("stage", "doc_id", "chunk_id", "n_tokens", "keep")
         .orderBy("stage", "doc_id", "chunk_id")
@@ -1934,23 +1897,12 @@ object ExtensionQueries {
       val batch = graft.operators.Multimodal.synthesizePpmTextured(
         docs.filter(col("doc_id") % 7 === 0),
         mediaIdOffset = 1000000L, perturb = true)
-      val tbl = "graft_dhash_state_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_dhash_state_") { tbl =>
         graft.operators.Multimodal.writeDhashTable(
           corpus, tbl, maxHamming = 4, buckets = 8)
         graft.operators.Multimodal
           .perceptualHashPairsAgainst(batch, s, tbl, maxHamming = 4)
           .localCheckpoint(true)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       Dedup.unpersistAll()
       out.orderBy("new_media", "corpus_media")
@@ -1967,13 +1919,7 @@ object ExtensionQueries {
       val batch = graft.operators.Multimodal.synthesizePpmTextured(
         docs.filter(col("doc_id") % 7 === 0),
         mediaIdOffset = 1000000L, perturb = true)
-      val tbl = "graft_dhash_del_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_dhash_del_") { tbl =>
         graft.operators.Multimodal.writeDhashTable(
           corpus, tbl, maxHamming = 4, buckets = 8)
         Dedup.deleteFromStateTable(
@@ -1999,11 +1945,6 @@ object ExtensionQueries {
           .localCheckpoint(true)
         Dedup.unpersistAll()
         masked.unionByName(compacted)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       out.select("stage", "new_media", "corpus_media", "hamming")
         .orderBy("stage", "new_media", "corpus_media")
@@ -2029,13 +1970,7 @@ object ExtensionQueries {
       val batch = graft.operators.Multimodal.synthesizePpmTextured(
         docs.filter(col("doc_id") % 7 === 0),
         mediaIdOffset = 1000000L, perturb = true)
-      val tbl = "graft_dhash_stream_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_dhash_stream_") { tbl =>
         graft.operators.Multimodal.writeDhashTable(
           corpus, tbl, maxHamming = 4, buckets = 8)
         val zero = graft.operators.Multimodal
@@ -2069,11 +2004,6 @@ object ExtensionQueries {
             fp, tbl, maxHamming = 4, bits = 64, buckets = 8)
           acc.unionByName(pairs)
         }.localCheckpoint(true)
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_tombstones`")
       }
       Dedup.unpersistAll()
       out.orderBy("new_media", "corpus_media")
@@ -2356,13 +2286,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg)
         .orderBy("shard", "seq")
     }),
     "q_pipeline_train_export_tokens" -> ((s, dir) => {
@@ -2375,14 +2299,10 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          contaminationMaxPpm = Some(500000L),
+        exportCfg.copy(
           budgets = Seq("src0" -> 2500L, "src1" -> 1500L),
           defaultBudget = 2000L,
-          budgetCurrency = graft.pipelines.TrainingExport.BudgetWordPieceTokens(),
-          numShards = 4))
+          budgetCurrency = TrainingExport.BudgetWordPieceTokens()))
         .orderBy("shard", "seq")
     }),
     "q_pipeline_train_export_spans" -> ((s, dir) => {
@@ -2399,14 +2319,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         planted,
         planted.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          spanDedup = Some(10),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg.copy(spanDedup = Some(10)))
         .orderBy("shard", "seq")
     }),
     "q_pipeline_train_export_paras" -> ((s, dir) => {
@@ -2420,14 +2333,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         planted,
         planted.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          paragraphDedup = true,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg.copy(paragraphDedup = true))
         .orderBy("shard", "seq")
     }),
     "q_pipeline_train_export_semantic" -> ((s, dir) => {
@@ -2445,14 +2351,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          semanticDedup = true,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4),
+        exportCfg.copy(semanticDedup = true),
         embeddings = plantScaledPrevEmbeddings(s, dir))
         .orderBy("shard", "seq")
     }),
@@ -2472,16 +2371,10 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         planted,
         planted.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
+        exportCfg.copy(
           paragraphDedup = true,
           spanDedup = Some(10),
-          semanticDedup = true,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4),
+          semanticDedup = true),
         embeddings = plantScaledPrevEmbeddings(s, dir))
         .orderBy("shard", "seq")
     }),
@@ -2501,17 +2394,11 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         planted,
         planted.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
+        exportCfg.copy(
           paragraphDedup = true,
           spanDedup = Some(10),
           semanticDedup = true,
-          mediaDedup = Some(4),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4),
+          mediaDedup = Some(4)),
         embeddings = plantScaledPrevEmbeddings(s, dir),
         media = plantPairedMedia(planted))
         .orderBy("shard", "seq")
@@ -2533,14 +2420,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          mediaDedup = Some(4),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4),
+        exportCfg.copy(mediaDedup = Some(4)),
         media = plantPairedMedia(docs))
         .orderBy("shard", "seq")
     }),
@@ -2558,13 +2438,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.runChunks(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 500L, "src1" -> 350L),
-          defaultBudget = 400L,
-          numShards = 4),
+        chunkExportCfg,
         chunkTokens = 30, strideTokens = 20)
         .orderBy("shard", "seq")
     }),
@@ -2580,13 +2454,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         Corpus.docCorpus(s, dir),
         Tables.documents(s, dir).filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupNearDup(numPartitions = Some(8)),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg.copy(dedup = TrainingExport.DedupNearDup(numPartitions = Some(8))))
         .orderBy("shard", "seq")
     }),
     "q_pipeline_chunk_media_export" -> ((s, dir) => {
@@ -2602,14 +2470,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.runChunks(
         docs,
         docs.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          mediaDedup = Some(4),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 500L, "src1" -> 350L),
-          defaultBudget = 400L,
-          numShards = 4),
+        chunkExportCfg.copy(mediaDedup = Some(4)),
         chunkTokens = 30, strideTokens = 20,
         media = plantPairedMedia(docs))
         .orderBy("shard", "seq")
@@ -2627,13 +2488,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         Corpus.docCorpus(s, dir),
         Tables.documents(s, dir).filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupSimHash(numPartitions = Some(8)),
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg.copy(dedup = TrainingExport.DedupSimHash(numPartitions = Some(8))))
         .orderBy("shard", "seq")
     }),
     "q_pipeline_incremental_ingest" -> ((s, dir) => {
@@ -2660,29 +2515,14 @@ object ExtensionQueries {
           .filter(col("verdict") === "keep").select("doc_id"),
         Seq("doc_id"), "left_semi").localCheckpoint(true)
       var sigs = Dedup.signatureTable(curated.limit(0)).localCheckpoint(true)
-      // per-JVM table name: harness mains run under a per-JVM scratch
-      // warehouse (ScratchWarehouse), but a caller embedding this
-      // query in their own session may not — keep names collision-free
-      val tbl = "graft_ingest_bands_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
       var kept: org.apache.spark.sql.DataFrame = null
-      // narrow shuffle width for the ingest loop: each batch's probe
-      // joins and appends move band rows of ONE batch (kilobytes at
-      // bench scale, batch-bounded by design at any scale), so the
-      // session's corpus-sized width just multiplies task overhead
-      // across ~10 tiny exchanges per round. Width is a physical
-      // knob: exchange COUNT (spec-pinned) and results are unchanged.
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
       // bucket count is the state-table SIZING knob (≈ one bucket per
       // probe-parallel unit of the deployment): 8 at bench scale — 32
       // would just commit 4× the files per append for kilobyte
       // buckets. Cadence behavior is bucket-count-invariant (appends
       // land one file PER BUCKET per ingest either way).
       val ingestBuckets = 8
-      try {
-        s.conf.set(shufKey, "8")
+      withIngestState(s, "graft_ingest_bands_") { tbl =>
         Dedup.writeBandTable(sigs, tbl, buckets = ingestBuckets) // empty seed state
         (0 until 4).foreach { b =>
           // batch is a narrow filter over the already-checkpointed
@@ -2721,10 +2561,6 @@ object ExtensionQueries {
           // per ingest, the exact shape the bucketed state avoids)
           sigs = sigs.unionByName(bs)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `${tbl}_compact_tmp`")
       }
       kept.orderBy("doc_id")
     }),
@@ -2748,13 +2584,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         gated,
         gated.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg)
         .orderBy("shard", "seq")
     }),
     "q_pipeline_train_export_fitgate" -> ((s, dir) => {
@@ -2784,13 +2614,7 @@ object ExtensionQueries {
       graft.pipelines.TrainingExport.run(
         gated,
         gated.filter(col("doc_id") % 97 === 0),
-        graft.pipelines.TrainingExport.Config(
-          curate = true,
-          dedup = graft.pipelines.TrainingExport.DedupExact,
-          contaminationMaxPpm = Some(500000L),
-          budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-          defaultBudget = 3000L,
-          numShards = 4))
+        exportCfg)
         .orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export" -> ((s, dir) => {
@@ -2808,38 +2632,11 @@ object ExtensionQueries {
       // state fold end-to-end.
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      // narrow shuffle width for the ingest loop (the
-      // q_pipeline_incremental_ingest rationale: per-batch exchanges
-      // move kilobytes; corpus-sized width just multiplies tasks)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      withIngestState(s, "graft_ingest_export_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, exportCfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_sigs", "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_neardup" -> ((s, dir) => {
       // the steady-state export under the NEAR-DUP stage: each batch
@@ -2852,36 +2649,12 @@ object ExtensionQueries {
       graft.functions.MinHashSig.register(s)
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_nd_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupNearDup(),
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = exportCfg.copy(dedup = TrainingExport.DedupNearDup())
+      withIngestState(s, "graft_ingest_export_nd_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, cfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_sigs", "_sigs_compact_tmp", "_sigs_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_simhash" -> ((s, dir) => {
       // the steady-state export under the SIMHASH stage: each batch
@@ -2891,35 +2664,12 @@ object ExtensionQueries {
       graft.functions.SimHashPack.register(s)
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_sh_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupSimHash(),
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = exportCfg.copy(dedup = TrainingExport.DedupSimHash())
+      withIngestState(s, "graft_ingest_export_sh_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, cfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_paras" -> ((s, dir) => {
       // the steady-state export with the PARAGRAPH (rewriting)
@@ -2935,37 +2685,12 @@ object ExtensionQueries {
       val corpus = Corpus.paraCorpus(s, dir)
         .withColumn("n_chars", length(col("text")).cast("long"))
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_pg_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        paragraphDedup = true,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = exportCfg.copy(paragraphDedup = true)
+      withIngestState(s, "graft_ingest_export_pg_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, cfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_lines", "_lines_compact_tmp", "_lines_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_tokens" -> ((s, dir) => {
       // the TOKEN-currency steady-state export (r16 verdict task #5:
@@ -2979,36 +2704,15 @@ object ExtensionQueries {
       // DIFFERENT doc sets, ~1.3-1.5× apart).
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_tk_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        contaminationMaxPpm = Some(500000L),
+      val cfg = exportCfg.copy(
         budgets = Seq("src0" -> 2500L, "src1" -> 1500L),
         defaultBudget = 2000L,
-        budgetCurrency = graft.pipelines.TrainingExport.BudgetWordPieceTokens(),
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+        budgetCurrency = TrainingExport.BudgetWordPieceTokens())
+      withIngestState(s, "graft_ingest_export_tk_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, cfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_spans" -> ((s, dir) => {
       // the steady-state export with SPAN surgery in the ingest
@@ -3027,37 +2731,12 @@ object ExtensionQueries {
           Tables.documents(s, dir).select("doc_id", "source"), Seq("doc_id"))
         .withColumn("n_chars", length(col("text")).cast("long"))
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_sp_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        spanDedup = Some(10),
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = exportCfg.copy(spanDedup = Some(10))
+      withIngestState(s, "graft_ingest_export_sp_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(batch, bench, cfg, p, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_shingles", "_shingles_compact_tmp", "_shingles_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_media" -> ((s, dir) => {
       // the MULTIMODAL steady-state export: each batch's media (the
@@ -3070,39 +2749,14 @@ object ExtensionQueries {
       // exact survivors with ONE decode per ingest.
       val corpus = Tables.documents(s, dir)
       val bench = corpus.filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_me_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        mediaDedup = Some(4),
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
+      val cfg = exportCfg.copy(mediaDedup = Some(4))
+      withIngestState(s, "graft_ingest_export_me_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(
             batch, bench, cfg, p, buckets = 8,
             media = plantPairedMedia(batch))
-          out = if (out == null) shipped else out.unionByName(shipped)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_mediafp", "_mediafp_compact_tmp", "_mediafp_tombstones",
-          "_mediadh", "_mediadh_compact_tmp", "_mediadh_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_semantic" -> ((s, dir) => {
       // the EMBEDDING granularity in the steady-state front: the
@@ -3115,33 +2769,11 @@ object ExtensionQueries {
       // the LARGER id arriving first and claiming the slot.
       val corpus = Tables.documents(s, dir)
       val bench = corpus.filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_se_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        semanticDedup = true,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
+      val cfg = exportCfg.copy(semanticDedup = true)
       val emb = plantScaledPrevEmbeddings(s, dir)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      def dropSemIdx(): Unit = {
-        val pth = new org.apache.hadoop.fs.Path(
-          graft.pipelines.TrainingExport.semanticIndexDir(s, p))
-        pth.getFileSystem(s.sparkContext.hadoopConfiguration).delete(pth, true)
-      }
-      try {
-        s.conf.set(shufKey, "8")
-        dropSemIdx() // a stale index from an aborted run must not leak in
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
+      withIngestState(s, "graft_ingest_export_se_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(
             batch, bench, cfg, p, buckets = 8, embeddings = emb,
             // the DuckDB twin models FROZEN batch-0 geometry — pin
             // that assumption (ADVICE r17) instead of relying on the
@@ -3149,16 +2781,8 @@ object ExtensionQueries {
             onSemanticMaintenance = a => require(
               a == graft.operators.SimilaritySearch.NoMaintenance,
               s"frozen-geometry fixture saw a maintenance action: $a"))
-          out = if (out == null) shipped else out.unionByName(shipped)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        dropSemIdx()
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_ingest_export_semantic_pq" -> ((s, dir) => {
       // the CODES-BACKED semantic ingest state (r16 verdict task #6):
@@ -3174,34 +2798,11 @@ object ExtensionQueries {
       // the codes, and the asymmetric cosine exactly.
       val corpus = Tables.documents(s, dir)
       val bench = corpus.filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_sq_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        semanticDedup = true,
-        semanticPq = true,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
+      val cfg = exportCfg.copy(semanticDedup = true, semanticPq = true)
       val emb = plantScaledPrevEmbeddings(s, dir)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      def dropSemIdx(): Unit = {
-        val pth = new org.apache.hadoop.fs.Path(
-          graft.pipelines.TrainingExport.semanticIndexDir(s, p))
-        pth.getFileSystem(s.sparkContext.hadoopConfiguration).delete(pth, true)
-      }
-      try {
-        s.conf.set(shufKey, "8")
-        dropSemIdx() // a stale index from an aborted run must not leak in
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runIngest(
+      withIngestState(s, "graft_ingest_export_sq_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runIngest(
             batch, bench, cfg, p, buckets = 8, embeddings = emb,
             semPqSeedMod = 5, semMinCosPpm = 920000L,
             // same pin as the float twin: the oracle's geometry (and
@@ -3210,16 +2811,8 @@ object ExtensionQueries {
             onSemanticMaintenance = a => require(
               a == graft.operators.SimilaritySearch.NoMaintenance,
               s"frozen-geometry fixture saw a maintenance action: $a"))
-          out = if (out == null) shipped else out.unionByName(shipped)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        dropSemIdx()
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_stream_ingest_export" -> ((s, dir) => {
       // the steady-state export DRIVEN BY A STREAM: the corpus
@@ -3237,16 +2830,6 @@ object ExtensionQueries {
       graft.functions.PolyHash.register(s)
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_stream_ingest_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 4000L, "src1" -> 2000L),
-        defaultBudget = 3000L,
-        numShards = 4)
       import org.apache.spark.sql.types._
       val zero = s.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -3255,24 +2838,16 @@ object ExtensionQueries {
           StructField("seq", LongType),
           StructField("doc_id", LongType),
           StructField("source", StringType))))
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      val out = try {
-        s.conf.set(shufKey, "8")
+      val out = withIngestState(s, "graft_stream_ingest_") { p =>
         graft.streaming.StreamRunner.foldBatches(
           graft.streaming.StreamRunner.slicedStream(
             corpus, "doc_id", slices = 3,
             tag = s"${java.nio.file.Paths.get(dir).toAbsolutePath}#ingestexport3"),
           zero) { (acc, batch, _) =>
           Dedup.unpersistAll()
-          acc.unionByName(graft.pipelines.TrainingExport.runIngest(
-            batch, bench, cfg, p, buckets = 8))
+          acc.unionByName(
+            TrainingExport.runIngest(batch, bench, exportCfg, p, buckets = 8))
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
       }
       Dedup.unpersistAll()
       out.orderBy("shard", "seq")
@@ -3288,39 +2863,13 @@ object ExtensionQueries {
           Tables.documents(s, dir).select("doc_id", "source"), Seq("doc_id"))
         .withColumn("n_chars", length(col("text")).cast("long"))
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_cksp_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        spanDedup = Some(10),
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 500L, "src1" -> 350L),
-        defaultBudget = 400L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runChunksIngest(
-            batch, bench, cfg, p, chunkTokens = 30, strideTokens = 20,
-            buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = chunkExportCfg.copy(spanDedup = Some(10))
+      withIngestState(s, "graft_ingest_export_cksp_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runChunksIngest(
+            batch, bench, cfg, p, chunkTokens = 30, strideTokens = 20, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_shingles", "_shingles_compact_tmp", "_shingles_tombstones",
-          "_chunks", "_chunks_compact_tmp", "_chunks_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_chunk_ingest_export_paras" -> ((s, dir) => {
       // the full ingest-front composition at chunk granularity: doc
@@ -3331,39 +2880,13 @@ object ExtensionQueries {
       val corpus = Corpus.paraCorpus(s, dir)
         .withColumn("n_chars", length(col("text")).cast("long"))
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_ckpg_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        paragraphDedup = true,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 500L, "src1" -> 350L),
-        defaultBudget = 400L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runChunksIngest(
-            batch, bench, cfg, p, chunkTokens = 30, strideTokens = 20,
-            buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      val cfg = chunkExportCfg.copy(paragraphDedup = true)
+      withIngestState(s, "graft_ingest_export_ckpg_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runChunksIngest(
+            batch, bench, cfg, p, chunkTokens = 30, strideTokens = 20, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_lines", "_lines_compact_tmp", "_lines_tombstones",
-          "_chunks", "_chunks_compact_tmp", "_chunks_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_pipeline_chunk_ingest_export" -> ((s, dir) => {
       // the steady-state export at CHUNK granularity
@@ -3376,37 +2899,12 @@ object ExtensionQueries {
       // the same chained arrival fold on chunk rows.
       val corpus = Corpus.docCorpus(s, dir)
       val bench = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val p = "graft_ingest_export_ck_" +
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-          .replaceAll("[^A-Za-z0-9]", "_")
-      val cfg = graft.pipelines.TrainingExport.Config(
-        curate = true,
-        dedup = graft.pipelines.TrainingExport.DedupExact,
-        contaminationMaxPpm = Some(500000L),
-        budgets = Seq("src0" -> 500L, "src1" -> 350L),
-        defaultBudget = 400L,
-        numShards = 4)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.get(shufKey)
-      var out: org.apache.spark.sql.DataFrame = null
-      try {
-        s.conf.set(shufKey, "8")
-        (0 until 3).foreach { b =>
-          Dedup.unpersistAll()
-          val batch = corpus.filter(pmod(col("doc_id"), lit(3)) === b)
-          val shipped = graft.pipelines.TrainingExport.runChunksIngest(
-            batch, bench, cfg, p, chunkTokens = 30, strideTokens = 20,
-            buckets = 8)
-          out = if (out == null) shipped else out.unionByName(shipped)
+      withIngestState(s, "graft_ingest_export_ck_") { p =>
+        arrivalBatches(corpus) { batch =>
+          TrainingExport.runChunksIngest(
+            batch, bench, chunkExportCfg, p, chunkTokens = 30, strideTokens = 20, buckets = 8)
         }
-      } finally {
-        s.conf.set(shufKey, prevShuf)
-        Seq("_dedup", "_dedup_compact_tmp", "_dedup_tombstones",
-          "_chunks", "_chunks_compact_tmp", "_chunks_tombstones",
-          "_budget", "_offsets")
-          .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$p$sfx`"))
-      }
-      out.orderBy("shard", "seq")
+      }.orderBy("shard", "seq")
     }),
     "q_train_shards" -> ((s, dir) => {
       // deterministic global shuffle + shard assignment for training

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DiffSql, DiffSummary, TableDiff, DiffOptions}
+import graft.operators.{Dedup, DiffSql, DiffSummary, TableDiff, DiffOptions}
 import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -402,7 +402,7 @@ object SparkEntry {
       // to coalesce/isnull forms no bucketed layout can satisfy.
       val bTbl = "graft_bucketed_orders_before"
       val aTbl = "graft_bucketed_orders_after"
-      Seq(bTbl, aTbl).foreach(resetBucketTable(s, _))
+      Seq(bTbl, aTbl).foreach(Dedup.dropState(s, _))
       Tables.orders(s, dir).write
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(bTbl)
       Tables.ordersAfter(s, dir).write
@@ -637,7 +637,7 @@ object SparkEntry {
       // and answer from the loaded schema × the table's row count —
       // every value in the result passed through the full lifecycle.
       val tbl = "graft_lifecycle_orders"
-      resetBucketTable(s, tbl)
+      Dedup.dropState(s, tbl)
       s.sql(
         s"""CREATE TABLE $tbl
            |(o_orderkey BIGINT, o_custkey BIGINT, o_orderpriority STRING)
@@ -1208,13 +1208,7 @@ object SparkEntry {
             (stacked.trim == graft.operators.DiffSql.flatten(sql)).toString))
           .toDF("item", "value")
           .orderBy("item")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(scratch)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      } finally TmpfsScratch.deleteRecursively(scratch)
     }),
     "q_hash_sample" -> ((s, dir) => {
       // deterministic hash sampling — the scale-safe sample: a pure
@@ -1563,30 +1557,9 @@ object SparkEntry {
       .createTempDirectory(s"graft_${prefix}_")
       .toAbsolutePath
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+      try TmpfsScratch.deleteRecursively(p)
+      catch { case _: Throwable => () }))
     p.toString
-  }
-
-  /** Drop a managed table AND its warehouse directory: across JVMs
-    * the in-memory catalog forgets the table while the files persist,
-    * and a later CREATE would refuse the non-empty location.
-    */
-  private def resetBucketTable(s: SparkSession, name: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:").stripPrefix("//")
-    val dir = java.nio.file.Paths.get(wh, name)
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close() // per-query call: the directory handle leaks otherwise
-    }
   }
 
   private lazy val ctasPath: String = scratchDir("ctas_orders_diff")

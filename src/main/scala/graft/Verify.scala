@@ -9,7 +9,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // iteration knob (driver leaves it unset → full run): restrict the
     // dump AND the emitted oracle json to a comma-separated subset so a
-    // local correctness loop on one new query doesn't re-run all 65
+    // local correctness loop on one new query doesn't re-run the whole suite
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // same fail-fast as Bench: a typo'd name must error, not no-op
@@ -51,17 +51,8 @@ object Verify {
         // result present, so leaving it would let the comparator hash
         // last run's (matching) parquet and report this query green
         // while the current code cannot produce it
-        try {
-          val dir = Paths.get(s"$outDir/$name")
-          if (Files.exists(dir)) {
-            val walk = Files.walk(dir)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.sorted(java.util.Comparator.reverseOrder())
-                .iterator().asScala.foreach(f => Files.deleteIfExists(f))
-            } finally walk.close()
-          }
-        } catch { case cleanup: Throwable =>
+        try TmpfsScratch.deleteRecursively(Paths.get(s"$outDir/$name"))
+        catch { case cleanup: Throwable =>
           // deletion failing would leave last run's parquet in place
           // AND presence-filter its oracle entry back in — the exact
           // stale-green hole the cleanup closes. Surface it loudly;

@@ -5,8 +5,8 @@ package graft.functions
   * construction — hashes are a plain polynomial char fold (mod p) so
   * the DuckDB oracle can reproduce them exactly; nothing here depends
   * on an engine-private hash. In a production deployment the hash is
-  * swappable for `xxhash64` (codegen'd, faster) via [[Dedup]]'s
-  * hashExpr parameter — the pipelines are hash-agnostic.
+  * swappable for `xxhash64` (codegen'd, faster) via the `hashExpr`
+  * parameter of the [[graft.operators.Sampling]] operators.
   *
   * Dialect gotchas encoded here (probed empirically):
   *   - Spark array indexing is 0-based, DuckDB 1-based;

@@ -853,6 +853,35 @@ object Dedup {
 
   private def tombstoneTableName(table: String): String = table + "_tombstones"
 
+  /** Tear down every piece of state kept under `prefix`: each
+    * non-temporary catalog table named `prefix` or `prefix_*` (a state
+    * table and the `_compact_tmp`/`_tombstones` siblings its verbs
+    * create, or a whole [[graft.pipelines.TrainingExport.runIngest]]
+    * prefix), then every warehouse entry with that name or the
+    * `prefix_` prefix. The sweep catches what the catalog cannot see:
+    * written layouts kept beside the tables (the ingest semantic
+    * stage's `_semidx`), and the directory of a CTAS killed before its
+    * table registered, which a fresh catalog never drops while every
+    * later CREATE fails with LOCATION_ALREADY_EXISTS. Names compare
+    * case-insensitively, as the catalog does. Single-writer, like the
+    * state itself.
+    */
+  def dropState(spark: org.apache.spark.sql.SparkSession, prefix: String): Unit = {
+    val p = prefix.toLowerCase(java.util.Locale.ROOT)
+    def owned(name: String): Boolean = {
+      val n = name.toLowerCase(java.util.Locale.ROOT)
+      n == p || n.startsWith(p + "_")
+    }
+    spark.catalog.listTables().collect()
+      .filter(t => !t.isTemporary && owned(t.name))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(wh))
+      fs.listStatus(wh).filter(st => owned(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, true))
+  }
+
   /** Tombstone documents in a bucketed state table (band or shingle —
     * both key rows by `doc_id`): `docIds` rows (first column, cast to
     * long) append to a tiny `{table}_tombstones` catalog table,

@@ -281,8 +281,7 @@ object SimilaritySearch {
 
     val cents = (1 to lloydIters).foldLeft(seeds) { (c, _) =>
       localize(
-        spreadForCompute(
-          fitEmb.select(col(idCol).as("vid"), col("embedding")))
+        fitEmb.select(col(idCol).as("vid"), col("embedding"))
           .crossJoin(broadcast(c))
           .withColumn("d", expr(l2sqSpark("embedding", "cemb")))
           .withColumn("rn", row_number().over(byDist))
@@ -336,7 +335,7 @@ object SimilaritySearch {
       centroids: DataFrame, vectors: DataFrame, idCol: String): DataFrame = {
     graft.functions.VecDot.register(vectors.sparkSession)
     val byDist = Window.partitionBy("vid").orderBy(col("d"), col("cid"))
-    spreadForCompute(vectors.select(col(idCol).as("vid"), col("embedding")))
+    vectors.select(col(idCol).as("vid"), col("embedding"))
       .crossJoin(broadcast(centroids))
       .withColumn("d", expr(l2sqSpark("embedding", "cemb")))
       .withColumn("rn", row_number().over(byDist))
@@ -1184,7 +1183,7 @@ object SimilaritySearch {
   private def nearestLists(
       centroids: DataFrame, queries: DataFrame, nprobe: Int, idCol: String): DataFrame = {
     val byDist = Window.partitionBy("vid").orderBy(col("d"), col("cid"))
-    spreadForCompute(queries.select(col(idCol).as("vid"), col("embedding")))
+    queries.select(col(idCol).as("vid"), col("embedding"))
       .crossJoin(broadcast(centroids))
       .withColumn("d", expr(l2sqSpark("embedding", "cemb")))
       .withColumn("rn", row_number().over(byDist))
@@ -1370,42 +1369,9 @@ object SimilaritySearch {
     PqCodebooks(m, subDim, cents)
   }
 
-  /** Parallelism floor for the JOIN-EXPLOSION kernels (nearest-
-    * centroid argmin, Lloyd assignment, PQ encode): their input rows
-    * are BYTES-tiny but each fans out k-fold against a broadcast
-    * centroid table, so a byte-derived split count (parquet row
-    * groups, AQE advisory sizes) under-partitions the compute by
-    * ~k× — measured at sf0.1 as 0.5–2 s single-task stages with 31
-    * idle cores (guide §2.5's input-skew shape, by compute density
-    * rather than bytes). One round-robin repartition of the
-    * PRE-explosion rows costs ≤1/k of the downstream FLOPs at any
-    * scale, so the floor is safe on a cluster too: max(total cores,
-    * shuffle partitions) tracks however the session is sized.
-    */
-  /** Gated OFF by default: measured at sf0.1 (isolated subset bench,
-    * 14 embed/semantic queries) the unconditional repartition REGRESSED
-    * the family 1.3–2× — the extra exchange adds an AQE stage
-    * materialization + plan re-render + 32-task scheduling round per
-    * argmin call, which at bench scale outweighs the single-task
-    * serialization it fixes. Opt in via spark conf
-    * `spark.graft.spreadForCompute=true` for deployments whose
-    * centroid sets are large enough that the k-fold blowup dominates
-    * (k in the thousands), where the floor pays for itself.
-    */
-  private def spreadForCompute(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.getOption("spark.graft.spreadForCompute").contains("true")) df
-    else {
-      val p = math.max(
-        spark.sparkContext.defaultParallelism,
-        spark.sessionState.conf.numShufflePartitions)
-      df.repartition(p)
-    }
-  }
-
   private def pqSubVecs(
       df: DataFrame, m: Int, subDim: Int, idCol: String): DataFrame =
-    spreadForCompute(df.select(col(idCol).as("vid"), col("embedding")))
+    df.select(col(idCol).as("vid"), col("embedding"))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
       .withColumn("sv", expr(s"slice(embedding, s * $subDim + 1, $subDim)"))
       .select("vid", "s", "sv")

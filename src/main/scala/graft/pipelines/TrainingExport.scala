@@ -186,24 +186,21 @@ object TrainingExport {
   /** Run the pipeline over `docs` (schema: doc_id, source, text,
     * n_chars). Returns (shard, seq, doc_id, source) — the trainer's
     * manifest; pair with [[Sampling.writeShards]] for the on-disk
-    * layout. `hashExpr` drives BOTH the mixture order and the shard
-    * placement and must be a non-negative deterministic hash of
-    * doc_id (default: the engine's char-hash, same as the inline
-    * queries this was extracted from). `embeddings` (vec_id keyed by
-    * doc_id, embedding) is required only when `cfg.semanticDedup` is
+    * layout. The engine's char-hash of doc_id (the hash of the inline
+    * queries this was extracted from) drives BOTH the mixture order
+    * and the shard placement. `embeddings` (vec_id keyed by doc_id,
+    * embedding) is required only when `cfg.semanticDedup` is
     * on — like `benchmark`, it's data, not config.
     */
   def run(
       docs: DataFrame,
       benchmark: => DataFrame,
       cfg: Config,
-      hashExpr: Option[String] = None,
       embeddings: => DataFrame = null,
       media: => DataFrame = null): DataFrame = {
     require(cfg.numShards >= 1, s"numShards must be >= 1, got ${cfg.numShards}")
     graft.functions.PolyHash.register(docs.sparkSession)
-    val h = hashExpr.getOrElse(
-      graft.functions.TextExprs.charHashSpark("CAST(doc_id AS STRING)"))
+    val h = graft.functions.TextExprs.charHashSpark("CAST(doc_id AS STRING)")
     val clean = cleanDocs(docs, benchmark, cfg, embeddings, media)
     val sampled =
       if (cfg.budgets.isEmpty) clean.select("doc_id", "source")
@@ -430,7 +427,6 @@ object TrainingExport {
       cfg: Config,
       chunkTokens: Int = 128,
       strideTokens: Int = 96,
-      hashExpr: Option[String] = None,
       embeddings: => DataFrame = null,
       media: => DataFrame = null): DataFrame = {
     require(cfg.numShards >= 1, s"numShards must be >= 1, got ${cfg.numShards}")
@@ -459,8 +455,7 @@ object TrainingExport {
           .filter(col("keep")).select("doc_id", "chunk_id"),
         Seq("doc_id", "chunk_id"), "left_semi")
       .withColumn("_cid", Dedup.packedChunkId(col("doc_id"), col("chunk_id")))
-    val h = hashExpr.getOrElse(
-      graft.functions.TextExprs.charHashSpark("CAST(_cid AS STRING)"))
+    val h = graft.functions.TextExprs.charHashSpark("CAST(_cid AS STRING)")
     val sampled =
       if (cfg.budgets.isEmpty) kept
       else Sampling.mixtureByBudget(
@@ -479,6 +474,13 @@ object TrainingExport {
     * or doc id would otherwise grow the driver-side read unboundedly.
     */
   val MaxBudgetSources = 1 << 20
+
+  /** Write tasks per ingest state append: one, so an ingest adds at
+    * most one file per bucket (a batch is small next to its state)
+    * and the compaction cadence counts ingests, not one append's
+    * fan-out.
+    */
+  private val IngestAppendTasks = 1
 
   /** STEADY-STATE ingest export — [[run]]'s incremental form, and the
     * composition every persisted dedup state exists for: at 100 TB
@@ -520,22 +522,24 @@ object TrainingExport {
     * accepted or not — the seen-corpus policy that keeps near-dup
     * chains from drifting in batch by batch.)
     *
-    * Document-granularity stages only: paragraph/span/semantic/media
-    * have their own persisted-state ingest verbs (see the fail-fast
-    * below) — compose them ahead of this call. Single-writer, like
-    * every state table in this library. Tracked persists are released
-    * by the caller's [[graft.operators.Dedup.unpersistAll]] (the
+    * The paragraph, span, semantic and media stages run here too,
+    * each on its own state under the prefix (`<p>_lines`,
+    * `<p>_shingles`, `<p>_semidx`, `<p>_mediafp`/`<p>_mediadh`) when
+    * `cfg` turns it on. [[graft.operators.Dedup.dropState]] with the
+    * prefix tears the whole state down. Single-writer, like every
+    * state table in this library. Tracked persists are released by
+    * the caller's [[graft.operators.Dedup.unpersistAll]] (the
     * ingest-loop convention). Returns the SHIPPED batch rows
     * (shard, seq, doc_id, source), already materialized — state
     * updates land before the method returns, so the frame stays valid
     * across later ingests and state drops.
     *
     * CRASH CONTRACT (at-least-once callers): states fold in the order
-    * dedup → budget → offsets, after the shipped frame materializes.
-    * A crash INSIDE that window can leave the dedup state holding the
-    * batch while budget/offsets never billed it; re-running the batch
-    * then ships nothing (the dedup state claims every doc) and the
-    * batch's text is lost to the corpus — the same first-wins
+    * media → shingle → line → dedup → budget/offsets, after the
+    * shipped frame materializes. A crash INSIDE that window can leave
+    * the dedup state holding the batch while budget/offsets never
+    * billed it; re-running the batch then ships nothing (the dedup
+    * state claims every doc) and the batch's text is lost to the corpus — the same first-wins
     * property every state table documents for takedowns. The remedy
     * is the takedown verb itself:
     * [[graft.operators.Dedup.deleteFromStateTable]] (or the
@@ -557,40 +561,36 @@ object TrainingExport {
       benchmark: => DataFrame,
       cfg: Config,
       statePrefix: String,
-      hashExpr: Option[String] = None,
       buckets: Int = Dedup.BandTableBuckets,
       maxFilesPerBucket: Int = 4,
       media: => DataFrame = null,
       embeddings: => DataFrame = null,
       semCentroidMod: Int = 50,
-      semPqM: Int = 16,
       semPqSeedMod: Int = 50,
       semMinCosPpm: Long = 995000L,
       semCorpusVectors: () => DataFrame = () => null,
       onSemanticMaintenance: SimilaritySearch.MaintenanceAction => Unit = _ => (),
-      semRefitErrFactor: Double = 2.0,
-      appendTasks: Int = 1)
+      semRefitErrFactor: Double = 2.0)
       : DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     require(cfg.numShards >= 1, s"numShards must be >= 1, got ${cfg.numShards}")
     graft.functions.PolyHash.register(spark)
-    val h = hashExpr.getOrElse(
-      graft.functions.TextExprs.charHashSpark("CAST(doc_id AS STRING)"))
+    val h = graft.functions.TextExprs.charHashSpark("CAST(doc_id AS STRING)")
     val gated = gateDocs(batch, cfg)
     val (accepted, appendDedupState) =
-      ingestDedupStage(gated, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestDedupStage(gated, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (paraged, appendLineState) =
-      ingestParagraphStage(accepted, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestParagraphStage(accepted, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (spanned, appendShingleState) =
-      ingestSpanStage(paraged, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestSpanStage(paraged, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (semed, _) =
       ingestSemanticStage(
         spanned, embeddings, cfg, statePrefix, semCentroidMod,
-        semPqM, semPqSeedMod, semMinCosPpm, semCorpusVectors,
+        semPqSeedMod, semMinCosPpm, semCorpusVectors,
         onSemanticMaintenance, semRefitErrFactor)
     val (mediaed, appendMediaState) =
-      ingestMediaStage(semed, media, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestMediaStage(semed, media, cfg, statePrefix, buckets, maxFilesPerBucket)
     val clean = decontaminate(mediaed, benchmark, cfg)
 
     // ---- cumulative budget: this batch fills the REMAINING budget
@@ -673,19 +673,16 @@ object TrainingExport {
       statePrefix: String,
       chunkTokens: Int = 128,
       strideTokens: Int = 96,
-      hashExpr: Option[String] = None,
       buckets: Int = Dedup.BandTableBuckets,
       maxFilesPerBucket: Int = 4,
       media: => DataFrame = null,
       embeddings: => DataFrame = null,
       semCentroidMod: Int = 50,
-      semPqM: Int = 16,
       semPqSeedMod: Int = 50,
       semMinCosPpm: Long = 995000L,
       semCorpusVectors: () => DataFrame = () => null,
       onSemanticMaintenance: SimilaritySearch.MaintenanceAction => Unit = _ => (),
-      semRefitErrFactor: Double = 2.0,
-      appendTasks: Int = 1)
+      semRefitErrFactor: Double = 2.0)
       : DataFrame = {
     val spark = batch.sparkSession
     require(cfg.numShards >= 1, s"numShards must be >= 1, got ${cfg.numShards}")
@@ -699,18 +696,18 @@ object TrainingExport {
     graft.functions.PolyHash.register(spark)
     val gated = gateDocs(batch, cfg)
     val (accepted, appendDedupState) =
-      ingestDedupStage(gated, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestDedupStage(gated, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (paraged, appendLineState) =
-      ingestParagraphStage(accepted, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestParagraphStage(accepted, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (spanned, appendShingleState) =
-      ingestSpanStage(paraged, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestSpanStage(paraged, cfg, statePrefix, buckets, maxFilesPerBucket)
     val (semed, _) =
       ingestSemanticStage(
         spanned, embeddings, cfg, statePrefix, semCentroidMod,
-        semPqM, semPqSeedMod, semMinCosPpm, semCorpusVectors,
+        semPqSeedMod, semMinCosPpm, semCorpusVectors,
         onSemanticMaintenance, semRefitErrFactor)
     val (mediaed, appendMediaState) =
-      ingestMediaStage(semed, media, cfg, statePrefix, buckets, maxFilesPerBucket, appendTasks)
+      ingestMediaStage(semed, media, cfg, statePrefix, buckets, maxFilesPerBucket)
     val clean = decontaminate(mediaed, benchmark, cfg)
 
     // ---- chunk + probe the persisted chunk-key state
@@ -724,8 +721,7 @@ object TrainingExport {
     val kept = markedChunks
       .filter(col("keep"))
       .withColumn("_cid", Dedup.packedChunkId(col("doc_id"), col("chunk_id")))
-    val h = hashExpr.getOrElse(
-      graft.functions.TextExprs.charHashSpark("CAST(_cid AS STRING)"))
+    val h = graft.functions.TextExprs.charHashSpark("CAST(_cid AS STRING)")
 
     // ---- cumulative chunk-token budget + cross-ingest seq
     val budgetTbl = s"${statePrefix}_budget"
@@ -763,7 +759,7 @@ object TrainingExport {
     // ever re-reads tables no earlier fold has moved
     Dedup.appendAndMaybeCompactLines(
       newChunkKeys, chunkTbl, buckets, maxFilesPerBucket,
-      appendTasks = appendTasks)
+      appendTasks = IngestAppendTasks)
     appendMediaState()
     appendShingleState()
     appendLineState()
@@ -783,8 +779,7 @@ object TrainingExport {
     */
   private def ingestDedupStage(
       gated: DataFrame, cfg: Config, statePrefix: String,
-      buckets: Int, maxFilesPerBucket: Int,
-      appendTasks: Int = 1): (DataFrame, () => Unit) = {
+      buckets: Int, maxFilesPerBucket: Int): (DataFrame, () => Unit) = {
     val spark = gated.sparkSession
     val dedupTbl = s"${statePrefix}_dedup"
     val sigsTbl = s"${statePrefix}_sigs"
@@ -815,7 +810,7 @@ object TrainingExport {
         (marked.filter(col("keep")).drop("keep"),
           () => { Dedup.appendAndMaybeCompactLines(
             newKeys, dedupTbl, buckets, maxFilesPerBucket,
-            appendTasks = appendTasks); () })
+            appendTasks = IngestAppendTasks); () })
       case DedupNearDup(_, _, cap) =>
         requireLayout(Seq("band", "bkey"), "DedupNearDup")
         // tracked persist: the probe, the within-batch pass, and the
@@ -847,8 +842,9 @@ object TrainingExport {
         (gated.join(rejected, gated("doc_id") === rejected("_rid"), "left_anti"),
           () => {
             Dedup.appendAndMaybeCompact(
-              sigs, dedupTbl, buckets, maxFilesPerBucket, appendTasks = appendTasks)
-            Dedup.appendToSignatureTable(sigs, sigsTbl, buckets, appendTasks)
+              sigs, dedupTbl, buckets, maxFilesPerBucket, appendTasks = IngestAppendTasks)
+            Dedup.appendToSignatureTable(
+              sigs, sigsTbl, buckets, appendTasks = IngestAppendTasks)
           })
       case DedupSimHash(mh, _, _, cap) =>
         requireLayout(Seq("sh_seg", "sh_key"), "DedupSimHash")
@@ -871,7 +867,7 @@ object TrainingExport {
             dedupTbl, mh, bits = graft.functions.TextExprs.SimhashBits,
             buckets = buckets,
             maxFilesPerBucket = maxFilesPerBucket,
-            appendTasks = appendTasks); () })
+            appendTasks = IngestAppendTasks); () })
     }
   }
 
@@ -888,8 +884,7 @@ object TrainingExport {
     */
   private def ingestParagraphStage(
       docs: DataFrame, cfg: Config, statePrefix: String,
-      buckets: Int, maxFilesPerBucket: Int,
-      appendTasks: Int = 1): (DataFrame, () => Unit) =
+      buckets: Int, maxFilesPerBucket: Int): (DataFrame, () => Unit) =
     if (!cfg.paragraphDedup) (docs, () => ())
     else {
       val spark = docs.sparkSession
@@ -905,7 +900,7 @@ object TrainingExport {
         length(col("text_deduped")).cast("long").as("n_chars")),
         () => { Dedup.appendAndMaybeCompactLines(
           newKeys, linesTbl, buckets, maxFilesPerBucket,
-          appendTasks = appendTasks); () })
+          appendTasks = IngestAppendTasks); () })
     }
 
   /** The ingest SPAN stage — substring surgery (Lee et al. 2022) on
@@ -949,8 +944,7 @@ object TrainingExport {
     */
   private def ingestSpanStage(
       docs: DataFrame, cfg: Config, statePrefix: String,
-      buckets: Int, maxFilesPerBucket: Int,
-      appendTasks: Int = 1): (DataFrame, () => Unit) =
+      buckets: Int, maxFilesPerBucket: Int): (DataFrame, () => Unit) =
     cfg.spanDedup match {
       case None => (docs, () => ())
       case Some(minTok) =>
@@ -980,7 +974,7 @@ object TrainingExport {
           length(col("clean_text")).cast("long").as("n_chars")),
           () => { Dedup.appendAndMaybeCompactShingles(
             staged, shTbl, minTok, buckets, maxFilesPerBucket,
-            appendTasks = appendTasks); () })
+            appendTasks = IngestAppendTasks); () })
     }
 
   /** Where the ingest SEMANTIC stage keeps its written IVF index —
@@ -1029,7 +1023,7 @@ object TrainingExport {
   private def ingestSemanticStage(
       docs: DataFrame, embeddings: => DataFrame, cfg: Config,
       statePrefix: String, semCentroidMod: Int,
-      semPqM: Int = 16, semPqSeedMod: Int = 50,
+      semPqSeedMod: Int = 50,
       semMinCosPpm: Long = 995000L,
       semCorpusVectors: () => DataFrame = () => null,
       onMaintenance: SimilaritySearch.MaintenanceAction => Unit = _ => (),
@@ -1055,7 +1049,7 @@ object TrainingExport {
           // persists coarse assignments + PQ codes + frozen codebooks
           // — ~m bytes a vector instead of a full float embedding
           val idx = SimilaritySearch.buildIndex(live, centroidMod = semCentroidMod)
-          val cb = SimilaritySearch.pqFit(live, m = semPqM, seedMod = semPqSeedMod)
+          val cb = SimilaritySearch.pqFit(live, m = 16, seedMod = semPqSeedMod)
           SimilaritySearch.writeIvfPqIndex(
             idx, cb, SimilaritySearch.pqEncode(live, cb), idxDir)
         }
@@ -1160,8 +1154,7 @@ object TrainingExport {
     */
   private def ingestMediaStage(
       docs: DataFrame, media: => DataFrame, cfg: Config, statePrefix: String,
-      buckets: Int, maxFilesPerBucket: Int,
-      appendTasks: Int = 1): (DataFrame, () => Unit) =
+      buckets: Int, maxFilesPerBucket: Int): (DataFrame, () => Unit) =
     cfg.mediaDedup match {
       case None => (docs, () => ())
       case Some(mh) =>
@@ -1209,10 +1202,10 @@ object TrainingExport {
             Dedup.appendAndMaybeCompactHamming(
               fps, dhTbl, mh, bits = 64,
               buckets = buckets, maxFilesPerBucket = maxFilesPerBucket,
-              appendTasks = appendTasks)
+              appendTasks = IngestAppendTasks)
             Dedup.appendAndMaybeCompactLines(
               xKeys, fpTbl, buckets, maxFilesPerBucket,
-              appendTasks = appendTasks)
+              appendTasks = IngestAppendTasks)
             ()
           })
     }

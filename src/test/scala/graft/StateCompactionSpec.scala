@@ -2000,4 +2000,89 @@ class StateCompactionSpec extends AnyFunSuite {
       Dedup.unpersistAll()
     }
   }
+
+  // ---- the state scaffold: Dedup.dropState and withIngestState
+
+  private def warehouse = {
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    (wh, wh.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Catalog tables and warehouse entries whose name starts with
+    * `prefix` (case-insensitive, as the catalog stores names).
+    */
+  private def stateLeft(prefix: String): Seq[String] = {
+    val p = prefix.toLowerCase(java.util.Locale.ROOT)
+    val (wh, fs) = warehouse
+    val tables = spark.catalog.listTables().collect().map(_.name).toSeq
+    val entries =
+      if (!fs.exists(wh)) Nil else fs.listStatus(wh).map(_.getPath.getName).toSeq
+    (tables ++ entries).filter(_.toLowerCase(java.util.Locale.ROOT).startsWith(p))
+  }
+
+  test("Dedup.dropState removes a prefix's tables, siblings and stray warehouse dirs only") {
+    val (wh, fs) = warehouse
+    val doomed = Seq("graft_ds", "graft_ds_x", "graft_ds_x_tombstones")
+    val kept = Seq("graft_dsx", "graft_ds2_x", "q_graft_ds_x")
+    // an unregistered written layout, and a CTAS killed before its
+    // table registered: on disk, unknown to the catalog
+    val strays = Seq("graft_ds_semidx/centroids", "graft_ds_y/_temporary/0")
+      .map(new org.apache.hadoop.fs.Path(wh, _))
+    try {
+      (doomed ++ kept).foreach { t =>
+        TestSpark.resetTable(spark, t)
+        spark.range(3).write.saveAsTable(t)
+      }
+      strays.foreach(d => fs.create(new org.apache.hadoop.fs.Path(d, "part-0")).close())
+      Dedup.dropState(spark, "graft_ds")
+      doomed.foreach(t => assert(!spark.catalog.tableExists(t), t))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(wh, "graft_ds_semidx")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(wh, "graft_ds_y")))
+      assert(stateLeft("graft_ds_").isEmpty, stateLeft("graft_ds_"))
+      kept.foreach { t =>
+        assert(spark.catalog.tableExists(t), t)
+        assert(spark.table(t).count() == 3, t)
+      }
+    } finally kept.foreach(TestSpark.resetTable(spark, _))
+  }
+
+  test("q_pipeline_ingest_export leaves no state behind and restores the shuffle width") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "5")
+      val rows = SparkEntry.queries("q_pipeline_ingest_export")(spark, dir).collect()
+      assert(rows.nonEmpty)
+      assert(spark.conf.get(key) == "5")
+      val prefix = "graft_ingest_export_" + ExtensionQueries.jvmName
+      assert(stateLeft(prefix).isEmpty, stateLeft(prefix))
+    } finally {
+      spark.conf.set(key, prev)
+      Dedup.unpersistAll()
+    }
+  }
+
+  test("withIngestState tears the state down and restores the width when the body throws") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val (wh, fs) = warehouse
+    var prefix = ""
+    try {
+      spark.conf.set(key, "5")
+      val e = intercept[IllegalStateException] {
+        ExtensionQueries.withIngestState(spark, "graft_scaffold_throw_") { p =>
+          prefix = p
+          assert(spark.conf.get(key) == "8")
+          spark.range(3).write.saveAsTable(s"${p}_dedup")
+          fs.mkdirs(new org.apache.hadoop.fs.Path(wh, s"${p}_semidx"))
+          assert(stateLeft(p).size == 3, stateLeft(p)) // table, its dir, the index dir
+          throw new IllegalStateException("ingest failed")
+        }
+      }
+      assert(e.getMessage == "ingest failed")
+      assert(prefix.startsWith("graft_scaffold_throw_"))
+      assert(spark.conf.get(key) == "5")
+      assert(stateLeft(prefix).isEmpty, stateLeft(prefix))
+    } finally spark.conf.set(key, prev)
+  }
 }
